@@ -175,16 +175,6 @@ object Bench {
       // shuffle IO, not CPU, is the contended resource
       .config("spark.io.compression.codec",
         sys.env.getOrElse("SPARK_GRAFT_IO_CODEC", "lz4"))
-      // Fall back from whole-stage codegen exactly when the fused method
-      // cannot JIT (guide §4 "codegen-friendly"): HotSpot refuses to compile
-      // methods over 8000 bytecode bytes (-XX:HugeMethodLimit), so a WSCG
-      // subtree above that runs INTERPRETED — measured 16.2 s vs 7.2 s on
-      // the 24-rule row-check suite at 10M rows (maxMethodCodeSize 11657).
-      // Spark's default (65535) only guards the compiler's hard limit; 8000
-      // is the JIT boundary on every JVM, local or cluster — not a
-      // local-mode tune. Small plans stay fully whole-stage-codegen'd.
-      .config("spark.sql.codegen.hugeMethodLimit",
-        sys.env.getOrElse("SPARK_GRAFT_HUGE_METHOD_LIMIT", "8000"))
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

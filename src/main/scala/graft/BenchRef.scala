@@ -101,9 +101,12 @@ object BenchRef {
   /** All-row-checks suite: breadth of the reference all_row_checks.yaml
     * corpus against the generated columns, applied in one pass.
     */
-  def allRowChecks(df: DataFrame): DataFrame = {
+  def allRowChecks(df: DataFrame): DataFrame = DQEngine.applyChecks(df, allRowRules)
+
+  /** The 24 rules of [[allRowChecks]]. */
+  def allRowRules: Seq[DQRowRule] = {
     val R = RowChecks
-    val rules = Seq(
+    Seq(
       DQRowRule(R.isNotNull(col("col1")), "is_not_null", Seq("col1")),
       DQRowRule(R.isNotNullAndNotEmpty(col("col2")), "is_not_null_and_not_empty", Seq("col2")),
       DQRowRule(R.isNotEmpty(col("col2")), "is_not_empty", Seq("col2")),
@@ -133,7 +136,6 @@ object BenchRef {
       DQRowRule(graft.checks.GeoChecks.isPoint(col("col_geo_point")), "is_point", Seq("col_geo_point")),
       DQRowRule(graft.checks.GeoChecks.isNotNullIsland(col("col_geo_point")), "is_not_null_island", Seq("col_geo_point"))
     )
-    DQEngine.applyChecks(df, rules)
   }
 
   /** All-dataset-checks suite (all_dataset_checks.yaml breadth). */

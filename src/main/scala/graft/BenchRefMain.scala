@@ -28,12 +28,6 @@ object BenchRefMain {
       // protocol-comparable across rounds unless explicitly overridden
       .config("spark.io.compression.codec",
         sys.env.getOrElse("SPARK_GRAFT_IO_CODEC", "lz4"))
-      // JIT-boundary codegen fallback (see Bench.scala): a WSCG method over
-      // 8000 bytecode bytes never JIT-compiles; the 24-rule row suite's
-      // fused projection measured 11657 bytes → interpreted, 2.25x slower.
-      // Env knob for A/B cells only; the default IS the shipped value.
-      .config("spark.sql.codegen.hugeMethodLimit",
-        sys.env.getOrElse("SPARK_GRAFT_HUGE_METHOD_LIMIT", "8000"))
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -15,9 +15,6 @@ object Verify {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.session.timeZone", "UTC")
-      // JIT-boundary codegen fallback, same value as the bench mains (see
-      // Bench.scala) so correctness runs execute the plans the bench times
-      .config("spark.sql.codegen.hugeMethodLimit", "8000")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -1,6 +1,7 @@
 package graft.checks
 
 import graft.core.CheckUtils._
+import graft.core.HoistedConstant
 import graft.rules.DatasetCheck
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
@@ -1267,8 +1268,8 @@ object DatasetChecks {
     }
     val now = curTimestamp.getOrElse(current_timestamp())
     val inLookback = lookbackWindows match {
-      case Some(n) => col(winCol) >= to_timestamp(from_unixtime(
-        unix_timestamp(now) - n.toLong * windowMinutes * 60))
+      case Some(n) => col(winCol) >= HoistedConstant(to_timestamp(from_unixtime(
+        unix_timestamp(now) - n.toLong * windowMinutes * 60)))
       case None => lit(true)
     }
     DatasetCheck(df => applyImpl(df, df),
@@ -1332,7 +1333,8 @@ object DatasetChecks {
           (col(nextCol).isNotNull &&
             unix_timestamp(col(nextCol)) - unix_timestamp(col(winCol)) > windowMinutes * 60L) ||
           (col(nextCol).isNull && trailingGapMinutes.exists(_ > 0) &&
-            unix_timestamp(now) - unix_timestamp(col(winCol)) > trailingGapMinutes.getOrElse(0) * 60L))
+            HoistedConstant(unix_timestamp(now)) - unix_timestamp(col(winCol)) >
+              trailingGapMinutes.getOrElse(0) * 60L))
       val renamed = groupBy.map(g => s"__dq_gg_${g}_$id")
       val flags = flagged.select(
         (groupBy.zip(renamed).map { case (g, nn) => col(g).as(nn) } :+

@@ -7,9 +7,7 @@ import org.apache.spark.sql.functions.col
   * vector over the fixed BIO tag set. Engine-portable plain data (the model
   * rides into generated code as a reference object via [[NerDetect]]).
   */
-final case class PerceptronNerModel(weights: Map[String, Array[Double]]) {
-  def tagCount: Int = PerceptronNer.Tags.length
-}
+final case class PerceptronNerModel(weights: Map[String, Array[Double]])
 
 /** Statistical (model-backed) NER behind the [[NerEngine]] seam — the
   * "trained model" half the gazetteer default deliberately left as a plug-in

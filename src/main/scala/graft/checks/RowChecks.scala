@@ -1,6 +1,7 @@
 package graft.checks
 
 import graft.core.CheckUtils._
+import graft.core.HoistedConstant
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
@@ -120,7 +121,7 @@ object RowChecks {
     */
   def isNotInFuture(c: Column, offsetSeconds: Long = 0, currTimestamp: Option[Column] = None): Column = {
     val now = currTimestamp.getOrElse(current_timestamp())
-    val bound = now + expr(s"INTERVAL $offsetSeconds SECOND")
+    val bound = HoistedConstant(now + expr(s"INTERVAL $offsetSeconds SECOND"))
     makeCondition(c.isNotNull && c > bound,
       concat(lit(s"Value '"), valueText(c), lit(s"' in column '${c.toString}' is in the future")))
   }
@@ -128,8 +129,8 @@ object RowChecks {
   /** check_funcs.py:702 — now < ts < now+offset fails. */
   def isNotInNearFuture(c: Column, offsetSeconds: Long = 0, currTimestamp: Option[Column] = None): Column = {
     val now = currTimestamp.getOrElse(current_timestamp())
-    val bound = now + expr(s"INTERVAL $offsetSeconds SECOND")
-    makeCondition(c.isNotNull && c > now && c < bound,
+    val bound = HoistedConstant(now + expr(s"INTERVAL $offsetSeconds SECOND"))
+    makeCondition(c.isNotNull && c > HoistedConstant(now) && c < bound,
       concat(lit(s"Value '"), valueText(c), lit(s"' in column '${c.toString}' is in the near future")))
   }
 
@@ -315,7 +316,7 @@ object RowChecks {
   /** check_funcs.py:1701 — col older than maxAgeMinutes vs base timestamp fails. */
   def isDataFresh(c: Column, maxAgeMinutes: Long, baseTimestamp: Option[Column] = None): Column = {
     val base = baseTimestamp.getOrElse(current_timestamp())
-    val bound = base - expr(s"INTERVAL $maxAgeMinutes MINUTE")
+    val bound = HoistedConstant(base - expr(s"INTERVAL $maxAgeMinutes MINUTE"))
     makeCondition(c.isNotNull && c < bound,
       concat(lit(s"Value '"), valueText(c),
         lit(s"' in column '${c.toString}' is older than $maxAgeMinutes minutes")))

@@ -19,11 +19,6 @@ object DQInfo {
     if (!fields.containsKey(name)) fields.put(name, dtype)
   }
 
-  def itemSchema: StructType = synchronized {
-    import scala.jdk.CollectionConverters._
-    StructType(fields.asScala.toSeq.map { case (n, t) => StructField(n, t, nullable = true) })
-  }
-
   /** Build one wide-struct element: provided fields keep their column, every
     * other registered field is a typed NULL (dq_info_schema.py:34-46).
     */

@@ -14,6 +14,17 @@ import scala.util.{Failure, Success, Try}
   * descriptors, NULL when clean — in ONE pass over the data. Row checks
   * compile into a single projection; each dataset check contributes its
   * joins/windows upstream in the same Catalyst plan.
+  *
+  * The result projection is two projections. The first materializes each
+  * rule's condition (message or NULL) once, each in a generated method of its
+  * own ([[graft.core.OwnMethod]]). The second builds each result column with
+  * one [[graft.core.ResultArray]]: its children are only the per-row guards,
+  * messages and `run_time`, and everything fixed for the run (names,
+  * fingerprints, run id, metadata, skipped entries, the folded instant) is
+  * one reference object. So the engine owns its codegen budget: every
+  * generated method stays far below HotSpot's 8000-byte JIT limit in a
+  * default session, and two calls with one rule shape generate
+  * byte-identical code, which Spark's codegen cache and the warm JIT reuse.
   */
 object DQEngine {
 
@@ -202,70 +213,37 @@ object DQEngine {
     }
 
     // Each active rule's condition (message-or-null) materializes EXACTLY once,
-    // in its own projection; the result projection below references only these
-    // attributes. CollapseProject declines to re-inline a non-cheap alias
-    // referenced more than once, so the check expressions never evaluate
-    // twice — inlining them directly into the result structs measured ~2x on
-    // a 24-check suite (guard + message both re-evaluate the check).
+    // in its own projection and its own generated method; the result
+    // projection below references only these attributes. CollapseProject
+    // declines to re-inline a non-cheap alias referenced more than once, so
+    // the check expressions never evaluate twice — inlining them directly
+    // into the result structs measured ~2x on a 24-check suite (guard +
+    // message both re-evaluate the check).
     val condCols: Seq[Option[String]] = compiled.zipWithIndex.map { case (c, i) =>
       if (c.skipped.isEmpty) Some(s"__dq_cond_$i") else None
     }
     val withConds = {
-      val adds = compiled.zip(condCols).collect { case (c, Some(n)) => c.condition.as(n) }
+      val adds = compiled.zip(condCols).collect { case (c, Some(n)) => OwnMethod(c.condition).as(n) }
       if (adds.isEmpty) current else current.select(col("*") +: adds: _*)
     }
 
-    def mkStruct(r: DQRule, message: Column, skipped: Boolean): Column = {
-      val meta = extra.userMetadata ++ r.userMetadata
-      val metadataCol =
-        if (meta.isEmpty) lit(null).cast("map<string,string>")
-        else map(meta.toSeq.flatMap { case (k, v) => Seq(lit(k), lit(v)) }: _*)
-      struct(
-        lit(r.resolvedName).as("name"),
-        message.as("message"),
-        (if (r.columns.isEmpty) lit(null).cast("array<string>")
-         else array(r.columns.map(lit): _*)).as("columns"),
-        r.filter.map(lit(_)).getOrElse(lit(null).cast("string")).as("filter"),
-        lit(r.function).as("function"),
-        runTime.as("run_time"),
-        lit(runId).as("run_id"),
-        metadataCol.as("user_metadata"),
-        lit(r.fingerprint).as("rule_fingerprint"),
-        lit(ruleSetFp).as("rule_set_fingerprint"),
-        lit(skipped).as("skipped"))
-    }
-
-    /** 0/1-element array for one rule (concat'd below; array_compact would
-      * rewrite to a lambda ArrayFilter with no codegen and de-codegen every
-      * check sharing the projection).
-      */
-    def resultPart(c: Compiled, condCol: Option[String]): Option[Column] = {
-      val r = c.rule
-      c.skipped match {
-        case Some(msg) =>
-          if (extra.suppressSkipped) None
-          else Some(array(mkStruct(r, lit(msg), skipped = true)))
-        case None =>
-          val n = condCol.get
-          val filterC = r.filter.map(f => expr(f)).getOrElse(lit(true))
-          // custom message expression replaces the default failure message,
-          // capped at 500 chars (manager.py:247-274)
-          val message = r.messageExpr match {
-            case Some(me) => substring(expr(me), 1, 500)
-            case None => col(n)
-          }
-          Some(when(filterC && col(n).isNotNull, array(mkStruct(r, message, skipped = false)))
-            .otherwise(array().cast(DQSchemas.resultArray)))
-      }
-    }
-
+    // One ResultArray per result column: only the guards, the messages and
+    // run_time are per-row children; everything fixed for the run is one
+    // reference object, so the generated code is run-invariant and small.
     def resultArray(cs: Seq[(Compiled, Option[String])]): Column = {
-      val parts = cs.flatMap { case (c, n) => resultPart(c, n) }
-      if (parts.isEmpty) lit(null).cast(DQSchemas.resultArray)
-      else {
-        val arr = concat(parts: _*)
-        when(size(arr) > 0, arr).otherwise(lit(null).cast(DQSchemas.resultArray))
+      val kept = cs.filter { case (c, _) => c.skipped.isEmpty || !extra.suppressSkipped }
+      val entries = kept.map { case (c, _) =>
+        val r = c.rule
+        ResultEntry(r.resolvedName, r.columns, r.filter, r.function,
+          (extra.userMetadata ++ r.userMetadata).toSeq, r.fingerprint, c.skipped)
       }
+      val active = kept.collect { case (c, Some(n)) => (c.rule, col(n)) }
+      ResultArray(ResultLayout(entries, runId, ruleSetFp),
+        active.map { case (r, c) => r.filter.map(f => expr(f) && c.isNotNull).getOrElse(c.isNotNull) },
+        // a custom message expression replaces the default failure message,
+        // capped at 500 chars (manager.py:247-274)
+        active.map { case (r, c) => r.messageExpr.map(me => substring(expr(me), 1, 500)).getOrElse(c) },
+        runTime)
     }
 
     val withNames = compiled.zip(condCols)

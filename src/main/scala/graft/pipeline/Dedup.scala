@@ -279,9 +279,10 @@ object Dedup {
       // next #6, guide §2 fewer jobs): an Observation collects the changed-
       // label count DURING the localCheckpoint materialization, so each
       // iteration runs ONE job instead of checkpoint + a separate isEmpty
-      // scan. Metrics arrive on an async listener; the bounded wait below
-      // degrades to the old isEmpty probe (over the materialized RDD) if
-      // they ever fail to land — never blocks, never changes the answer.
+      // scan. Metrics arrive on an async listener; one wait on the
+      // observation's future, bounded at 2 s, degrades to the old isEmpty
+      // probe (over the materialized RDD) if they ever fail to land — never
+      // blocks for longer, never changes the answer.
       val obs = new org.apache.spark.sql.Observation()
       val merged = labels.join(prop, Seq("id"), "left")
         .select(col("id"), col("label"),
@@ -289,13 +290,9 @@ object Dedup {
         .observe(obs, sum(when(col("__next") < col("label"), 1L).otherwise(0L)).as("changed"))
         .localCheckpoint()
       def observedChanged: Option[Long] = {
-        import org.apache.spark.sql.GraftObservationBridge.{getOrEmpty => metricsOf}
-        var waitedMs = 0
-        var row = metricsOf(obs)
-        while (row.isEmpty && waitedMs < 2000) {
-          Thread.sleep(10); waitedMs += 10; row = metricsOf(obs)
-        }
-        row.get("changed").collect { case n: Long => n }
+        import scala.concurrent.duration._
+        org.apache.spark.sql.GraftObservationBridge.await(obs, 2.seconds)
+          .get("changed").collect { case n: Long => n }
       }
       converged = observedChanged match {
         case Some(n) => n == 0L
@@ -351,12 +348,6 @@ object Dedup {
   }
 
   // ------------------------------------------------------------------ SimHash
-
-  /** 64-bit SimHash over the token array (single-pass custom expression). */
-  def simHash(tokensCol: Column): Column = {
-    import org.apache.spark.sql.GraftColumnBridge
-    GraftColumnBridge.column(SimHash64(GraftColumnBridge.expression(tokensCol)))
-  }
 
   /** Near-duplicate pairs by SimHash Hamming distance <= maxHamming.
     * Chunk-PAIR pigeonhole banding: the 64-bit sketch splits into

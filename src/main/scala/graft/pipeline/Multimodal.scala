@@ -337,14 +337,4 @@ object Multimodal {
                                   rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
                                   schema: StructType): DataFrame =
     org.apache.spark.sql.GraftDatasetBridge.ofRows(spark, rdd, schema)
-
-  /** Frame-sample stage for video-like media: keep every `stride`-th frame
-    * index up to `maxFrames` (metadata-level planning; actual frame extraction
-    * happens in the decoder). Emits one row per sampled frame index.
-    */
-  def sampleFrameIndexes(df: DataFrame, nFramesCol: String, stride: Int,
-                         maxFrames: Int, outCol: String = "frame_index"): DataFrame =
-    df.withColumn(outCol,
-      explode(slice(sequence(lit(0), greatest(coalesce(col(nFramesCol), lit(1)) - 1, lit(0)), lit(stride)),
-        1, maxFrames)))
 }

@@ -61,12 +61,6 @@ object UrlAnalysis {
   def query(url: Column): Column =
     nullIfEmpty(regexp_extract(url, queryRe, 1))
 
-  /** True when the host is a dotted-quad IPv4 literal. */
-  def isIpHost(url: Column): Column = {
-    val h = host(url)
-    coalesce(h.rlike(ipv4HostRe), lit(false))
-  }
-
   /** Registered (pay-level) domain: the suffix plus one label —
     * `a.b.example.com` → `example.com`, `shop.example.co.uk` →
     * `example.co.uk` (via [[MultiLabelSuffixes]]). IP-literal hosts and

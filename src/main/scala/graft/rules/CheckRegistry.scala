@@ -430,7 +430,4 @@ object CheckRegistry {
       .orElse(datasetBuilders.get(name).map(b => DatasetCheckFn(b)))
       .orElse(resolveQualified(name))
       .getOrElse(throw new IllegalArgumentException(s"Unknown check function: $name"))
-
-  def isRowCheck(name: String): Boolean = resolve(name).isInstanceOf[RowCheckFn]
-  def knownFunctions: Set[String] = rowBuilders.keySet ++ datasetBuilders.keySet ++ custom.keySet
 }

@@ -21,14 +21,10 @@ object RowCheckProbe {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      // hypothesis knobs for the suite-overhead attribution (default = the
+      // hypothesis knob for the suite-overhead attribution (default = the
       // engine's real config): whole-stage codegen on/off
       .config("spark.sql.codegen.wholeStage",
         sys.env.getOrElse("SPARK_GRAFT_PROBE_WSCG", "true"))
-      // ...and the JIT-boundary fallback (65535 = Spark default, 8000 =
-      // HotSpot HugeMethodLimit: larger methods never JIT-compile)
-      .config("spark.sql.codegen.hugeMethodLimit",
-        sys.env.getOrElse("SPARK_GRAFT_PROBE_HUGE", "65535"))
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
@@ -105,9 +101,9 @@ object RowCheckProbe {
     }
     println(s"""{"rows":$rows,"reps":$reps,${report.mkString(",")}}""")
 
-    // plan/codegen shape of the full suite: whole-stage codegen can silently
-    // abandon a projection whose generated method exceeds hugeMethodLimit —
-    // invisible in explain(), decisive for a 24-rule fused projection
+    // plan/codegen shape of the full suite: the generated method sizes of
+    // every whole-stage-codegen subtree (HotSpot never JIT-compiles a method
+    // over 8000 bytes) — invisible in explain()
     if (sys.env.get("SPARK_GRAFT_PROBE_PLAN").contains("1")) {
       val checked = DQEngine.applyChecks(df, rules.map(_._2))
       val agg = checked.select(

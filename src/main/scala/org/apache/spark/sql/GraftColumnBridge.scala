@@ -11,13 +11,15 @@ object GraftColumnBridge {
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 }
 
-/** Bridge to Observation's package-private non-blocking read: `getOrEmpty`
-  * returns the observed metrics row if the action's listener has delivered
-  * it, else an empty map — the public `get` blocks forever if metrics never
-  * land, which an engine loop must not risk.
+/** Bridge to Observation's package-private future: one bounded blocking wait
+  * for the observed metrics row, or an empty map once `timeout` passes — the
+  * public `get` blocks forever if metrics never land, which an engine loop
+  * must not risk.
   */
 object GraftObservationBridge {
-  def getOrEmpty(o: Observation): Map[String, Any] = o.getOrEmpty
+  def await(o: Observation, timeout: scala.concurrent.duration.FiniteDuration): Map[String, Any] =
+    scala.util.Try(scala.concurrent.Await.ready(o.future, timeout)).map(_ => o.getOrEmpty)
+      .getOrElse(Map.empty)
 }
 
 /** Bridge to the package-private internalCreateDataFrame — lets partition-local

@@ -4,7 +4,10 @@ import graft.checks.{DatasetChecks, RowChecks}
 import graft.core._
 import graft.engine.DQEngine
 import graft.rules._
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeAndComment, CodeGenerator}
+import org.apache.spark.sql.execution.{SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.functions._
 
 /** End-to-end slice (SURVEY §7.2): metadata-shaped rules -> result arrays ->
@@ -552,5 +555,87 @@ class EngineSpec extends SparkSpec {
     assert(nodes < 40 * rules.length, s"mixed stack not linear: $nodes optimized nodes")
     // and it runs: row count preserved, no errors on a clean frame
     assert(out.count() == 200)
+  }
+
+  // ---------------------------------------------------- generated code
+
+  /** Every physical node of an executed query, through AQE's query stages. */
+  private def executedNodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => executedNodes(a.finalPhysicalPlan)
+    case q: QueryStageExec => executedNodes(q.plan)
+    case o => o +: o.children.flatMap(executedNodes)
+  }
+
+  /** Runs `df`; the code of each of its whole-stage-codegen subtrees. */
+  private def wholeStageCode(df: DataFrame): Seq[CodeAndComment] = {
+    df.collect()
+    executedNodes(df.queryExecution.executedPlan).collect {
+      case w: WholeStageCodegenExec => w.doCodeGen()._2
+    }
+  }
+
+  /** Read every row's result arrays through one aggregate, as a user would. */
+  private def flagged(checked: DataFrame): DataFrame =
+    checked.agg(count_if(col("_errors").isNotNull || col("_warnings").isNotNull))
+
+  test("two applyChecks calls with one rule shape generate byte-identical code") {
+    // fresh run ids and the default current_timestamp() run time: nothing
+    // run-specific may reach the code text, or every call misses Spark's
+    // codegen cache and starts cold in the JIT
+    val df = BenchRef.generatedDf(spark, 200).cache()
+    df.count()
+    val rules = BenchRef.allRowRules :+ DQRowRule(RowChecks.isNotInFuture(col("col6")),
+      "is_not_in_future", Seq("col6"), name = "col6_not_in_future_now")
+    def code(): Seq[String] = wholeStageCode(flagged(DQEngine.applyChecks(df, rules))).map(_.body)
+    val first = code()
+    Thread.sleep(5)
+    val second = code()
+    df.unpersist()
+    assert(first.nonEmpty)
+    assert(first == second)
+  }
+
+  test("every generated method of a 24- and a 64-rule plan stays under HotSpot's 8000-byte JIT limit") {
+    // default session: Spark's own hugeMethodLimit, whole-stage codegen on
+    assert(spark.conf.get("spark.sql.codegen.hugeMethodLimit") == "65535")
+    assert(spark.conf.get("spark.sql.codegen.wholeStage") == "true")
+    val df = BenchRef.generatedDf(spark, 200)
+    val base = BenchRef.allRowRules
+    val wide = (0 until 64).map(i => base(i % base.size).copy(name = f"r$i%02d",
+      criticality = if (i % 2 == 0) Criticality.Error else Criticality.Warn))
+    for (rules <- Seq(base, wide)) {
+      val sizes = wholeStageCode(flagged(DQEngine.applyChecks(df, rules)))
+        .map(c => CodeGenerator.compile(c)._2.maxMethodCodeSize)
+      assert(sizes.nonEmpty && sizes.forall(_ < 8000), s"${rules.size} rules: method sizes $sizes")
+    }
+  }
+
+  test("count() prunes every check: no ResultArray and no condition in the optimized plan") {
+    val checked = DQEngine.applyChecks(BenchRef.generatedDf(spark, 50), BenchRef.allRowRules)
+    val counted = checked.groupBy().count()
+    val plan = counted.queryExecution.optimizedPlan
+    assert(!plan.flatMap(_.expressions).exists(_.exists(e =>
+      e.isInstanceOf[ResultArray] || e.isInstanceOf[OwnMethod])))
+    assert(!plan.toString.contains("__dq_cond_"))
+    assert(counted.collect().head.getLong(0) == 50L)
+  }
+
+  test("streaming applyChecks: each micro-batch stamps its own instant, in checks and run_time") {
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
+    val df = in.toDF().toDF("id", "ts").withColumn("ts", col("ts").cast("timestamp"))
+    val rules = Seq(DQRowRule(RowChecks.isNotInFuture(col("ts")), "is_not_in_future", Seq("ts")))
+    val q = DQEngine.applyChecks(df, rules).writeStream.format("memory")
+      .queryName("engine_stream_out").start()
+    in.addData((1L, "2090-01-01 00:00:00"), (2L, "2001-01-01 00:00:00"))
+    q.processAllAvailable()
+    Thread.sleep(5)
+    in.addData((3L, "2095-01-01 00:00:00"))
+    q.processAllAvailable()
+    q.stop()
+    val stamps = spark.table("engine_stream_out").select(col("id"), expr("_errors[0].run_time"))
+      .as[(Long, Option[java.sql.Timestamp])].collect().sortBy(_._1)
+    assert(stamps.map(s => s._1 -> s._2.isDefined).toSeq == Seq(1L -> true, 2L -> false, 3L -> true))
+    assert(stamps(0)._2.get.before(stamps(2)._2.get))
   }
 }
